@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 DEFAULT_BUDGET = 5
 
 
@@ -81,10 +83,7 @@ def schedule_round(
         splits_df = host_splits(frontier)
     elif isinstance(splits, dict):
         splits_df = F.broadcast(
-            spark.createDataFrame(
-                [(h, s) for h, s in splits.items()] or [("__none__", 1)],
-                "host string, _splits int",
-            )
+            local_frame(spark, list(splits.items()), "host string, _splits int")
         )
     else:
         splits_df = splits

@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..caching import carry_checkpoint
+from ..session import local_frame
 
 
 def global_sequence(
@@ -56,8 +57,8 @@ def global_sequence(
     w = Window.partitionBy("_pid").orderBy(*order_cols)
     if len(offsets) > 64:
         # wide plans: broadcast-join the offset map instead of a case chain
-        off_df = F.broadcast(spark.createDataFrame(
-            [(pid, off) for pid, off in offsets.items()], "_pid int, _off long"
+        off_df = F.broadcast(local_frame(
+            spark, list(offsets.items()), "_pid int, _off long"
         ))
         return carry_checkpoint(
             ranged.join(off_df, "_pid", "left")

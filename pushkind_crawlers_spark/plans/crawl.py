@@ -26,6 +26,8 @@ from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -38,7 +40,7 @@ from ..functions.parsing import (
     units_col,
     validate_products,
 )
-from ..functions.urlnorm import canonicalize_url_udf, host_of
+from ..functions.urlnorm import canonicalize_url_col, host_of
 from ..operators.budget import (
     host_splits,
     parse_robots_full_py,
@@ -57,7 +59,8 @@ from ..operators.seen import (NumpyBloom, add_to_bloom, build_cuckoo_sidecar,
                               filter_new_urls, filter_new_urls_sidecar,
                               filter_new_urls_sidecar_partitioned,
                               resolve_seen_mode, update_cuckoo_sidecar)
-from ..store.snapshots import SnapshotStore
+from ..session import local_frame
+from ..store.snapshots import SnapshotStore, parquet_rows, read_staged
 from ..synth.phash import gray32, phash64_batch
 from ..synth.worldgen import SyntheticWorld
 
@@ -266,8 +269,8 @@ class CrawlEngine:
                 F.col("crawl_delay_s").isNotNull()
             ).select("host", "crawl_delay_s")
         else:
-            self._robots_df = spark.createDataFrame([], "host string, prefix string")
-            self._delays_df = spark.createDataFrame([], "host string, crawl_delay_s double")
+            self._robots_df = local_frame(spark, [], "host string, prefix string")
+            self._delays_df = local_frame(spark, [], "host string, crawl_delay_s double")
         self._tables = {
             "frontier": schemas.FRONTIER,
             "seen": schemas.SEEN,
@@ -282,7 +285,8 @@ class CrawlEngine:
         for name, schema in self._tables.items():
             self.store.table(name, schema)
         self._politeness = F.broadcast(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [
                     (r["host"], r["budget_per_round"], r["robots_disallow"], r["crawl_delay_ms"])
                     for r in world.politeness_rows()
@@ -291,7 +295,8 @@ class CrawlEngine:
             )
         )
         self._site_dim = F.broadcast(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [
                     (hc.host, hc.idx, hc.page_param, hc.last_page_rule,
                      getattr(hc, "amount_source", "combined"))
@@ -326,9 +331,7 @@ class CrawlEngine:
                         rows["crawl_delay_s"].append(float(delay))
                 yield pd.DataFrame(rows)
 
-        hosts_df = self.spark.createDataFrame(
-            [(h,) for h in hosts], "host string"
-        )
+        hosts_df = local_frame(self.spark, [(h,) for h in hosts], "host string")
         schema = "host string, prefix string, crawl_delay_s double"
         rules = hosts_df.mapInPandas(fetch_parse, schema)
         # materialize once (tiny: rules rows only) — consumed every round
@@ -343,17 +346,16 @@ class CrawlEngine:
         from the parquet footers, not a Spark job."""
         path = os.path.join(self._work, f"round-{round_no:06d}", name)
         df.write.mode("overwrite").parquet(path)
-        from ..store.snapshots import parquet_rows
-
         return self.spark.read.schema(df.schema).parquet(path), parquet_rows(path)
 
     def _init_frontier(self) -> None:
         spark = self.spark
-        seed_df = spark.createDataFrame(
-            [(u, i) for i, u in enumerate(self.seeds)], "raw_url string, seed_idx int"
+        seed_df = local_frame(
+            spark, [(u, i) for i, u in enumerate(self.seeds)],
+            "raw_url string, seed_idx int",
         )
         canon = (
-            seed_df.withColumn("url", canonicalize_url_udf(F.col("raw_url")))
+            seed_df.withColumn("url", canonicalize_url_col(F.col("raw_url")))
             .withColumn("host", host_of(F.col("url")))
             .withColumn("ord", hseg_col(F.col("seed_idx")))
             .withColumn("url_hash", F.xxhash64("url"))
@@ -382,21 +384,18 @@ class CrawlEngine:
             to_stage["seen_sidecar"] = build_cuckoo_sidecar(
                 seen0, self.sidecar_shards)
         for name in ("results", "rejects", "images", "crawl_order", "lineage"):
-            to_stage[name] = self.spark.createDataFrame([], self._tables[name])
+            to_stage[name] = local_frame(self.spark, [], self._tables[name])
         with ThreadPoolExecutor(max_workers=len(to_stage)) as ex:
             futs = {name: ex.submit(self.store.table(name).stage, df)
                     for name, df in to_stage.items()}
             staged = {name: f.result() for name, f in futs.items()}
         self.store.commit_round(staged, round_no=0, run_id=self.run_id)
         if self.bloom is not None:
-            import glob as _glob
+            self._add_staged_to_bloom(staged["seen"])
 
-            import pyarrow.parquet as _pq
-
-            for f in _glob.glob(os.path.join(staged["seen"][0], "*.parquet")):
-                t = _pq.read_table(f, columns=["url_hash"])
-                self.bloom.add(
-                    t["url_hash"].to_numpy(zero_copy_only=False).astype(np.int64))
+    def _add_staged_to_bloom(self, staged_seen: tuple[str, int]) -> None:
+        hashes = read_staged(staged_seen, pa.schema([("url_hash", pa.int64())]))["url_hash"]
+        self.bloom.add(hashes.to_numpy().astype(np.int64))
 
     def _read_state(self) -> tuple[dict, dict[str, DataFrame]]:
         state = self.store.read_run_state()
@@ -515,147 +514,156 @@ class CrawlEngine:
         results_pool = ThreadPoolExecutor(max_workers=1)
         results_future = results_pool.submit(
             self.store.table("results").stage, results_parsed)
-        rejects_val = rejects_new.select(
-            "url", "host", "reject_reason", F.lit(round_no).alias("round")
-        )
-        _mark("parse_results")
-
-        # ---- images: decode + phash (input_hint columns) ------------------
-        # every fetched page's imagery (products + category banners); the
-        # parent url_hash rides through the decode so the novelty term can
-        # attribute each phash to the page that served it
-        decoded = None
-        if self.keep_images:
-            img_in = (
-                fetched.filter(F.col("ok") & F.col("images").isNotNull())
-                .select("url_hash", F.explode("images").alias("im"))
-                .select("url_hash", "im.image_id", "im.bytes", "im.caption")
+        try:
+            rejects_val = rejects_new.select(
+                "url", "host", "reject_reason", F.lit(round_no).alias("round")
             )
-            decoded = img_in.mapInPandas(decode_images_fn, _IMG_DECODED)
-            if self.weights.novelty > 0.0:
-                # two consumers (images table + novelty agg): stage once
-                decoded, _ = self._stage_df(decoded, round_no, "images_decoded")
-            images_new = decoded.select(*[f.name for f in schemas.IMAGES.fields])
-        else:
-            images_new = self.spark.createDataFrame([], schemas.IMAGES)
-        _mark("image_decode")
+            _mark("parse_results")
 
-        # ---- link discovery ----------------------------------------------
-        candidates = self._discover_links(fetched, round_no)
-        candidates, m.links_discovered = self._stage_df(candidates, round_no, "candidates")
-        _mark("link_discovery")
-        discovered_by_host = candidates.groupBy("host").agg(
-            F.count("*").alias("links_discovered")
-        )
+            # ---- images: decode + phash (input_hint columns) --------------
+            # every fetched page's imagery (products + category banners); the
+            # parent url_hash rides through the decode so the novelty term can
+            # attribute each phash to the page that served it
+            decoded = None
+            if self.keep_images:
+                img_in = (
+                    fetched.filter(F.col("ok") & F.col("images").isNotNull())
+                    .select("url_hash", F.explode("images").alias("im"))
+                    .select("url_hash", "im.image_id", "im.bytes", "im.caption")
+                )
+                decoded = img_in.mapInPandas(decode_images_fn, _IMG_DECODED)
+                if self.weights.novelty > 0.0:
+                    # two consumers (images table + novelty agg): stage once
+                    decoded, _ = self._stage_df(decoded, round_no, "images_decoded")
+                images_new = decoded.select(*[f.name for f in schemas.IMAGES.fields])
+            else:
+                images_new = local_frame(self.spark, [], schemas.IMAGES)
+            _mark("image_decode")
 
-        # first-wins intra-batch dedup (ord order == discovery order)
-        w = Window.partitionBy("url_hash", "url").orderBy("ord")
-        deduped = (
-            candidates.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        # axis A: bloom fast path + seen-filter confirm; the surviving
-        # links are staged ONCE, then split against the robots rules
-        # table with a host-keyed semi/anti join (JVM startswith
-        # predicate — no driver dict, no Python in the match)
-        if self.seen_mode == "sidecar":
-            side_df = dfs["seen_sidecar"]
-            # Staleness guard (ADVICE r02): rounds committed under
-            # seen_mode='anti' leave the run manifest with NO
-            # 'seen_sidecar' snapshot id, so _read_state fell back to the
-            # table's 'current' pointer — possibly an OLDER sidecar-mode
-            # run whose filters lack newer seen keys (probe false
-            # negatives -> re-crawled duplicates). Rebuild from the seen
-            # snapshot this round actually reads whenever the manifest
-            # lacks the sidecar entry, not merely when the table is empty.
-            sizing = (F.count(F.lit(1)).alias("n"),
-                      F.coalesce(F.sum(F.length("words")), F.lit(0)).alias("blob_bytes"))
-            stats = side_df.agg(*sizing).first()
-            if "seen_sidecar" not in state["snapshot_ids"] or stats["n"] == 0:
-                rebuilt = build_cuckoo_sidecar(seen, self.sidecar_shards)
-                side_df, _ = self._stage_df(rebuilt, round_no, "sidecar_rebuilt")
+            # ---- link discovery ------------------------------------------
+            candidates = self._discover_links(fetched, round_no)
+            candidates, m.links_discovered = self._stage_df(candidates, round_no, "candidates")
+            _mark("link_discovery")
+            discovered_by_host = candidates.groupBy("host").agg(
+                F.count("*").alias("links_discovered")
+            )
+
+            # first-wins intra-batch dedup (ord order == discovery order)
+            w = Window.partitionBy("url_hash", "url").orderBy("ord")
+            deduped = (
+                candidates.withColumn("_rn", F.row_number().over(w))
+                .filter(F.col("_rn") == 1)
+                .drop("_rn")
+            )
+            # axis A: bloom fast path + seen-filter confirm; the surviving
+            # links are staged ONCE, then split against the robots rules
+            # table with a host-keyed semi/anti join (JVM startswith
+            # predicate — no driver dict, no Python in the match)
+            if self.seen_mode == "sidecar":
+                side_df = dfs["seen_sidecar"]
+                # Staleness guard (ADVICE r02): rounds committed under
+                # seen_mode='anti' leave the run manifest with NO
+                # 'seen_sidecar' snapshot id, so _read_state fell back to the
+                # table's 'current' pointer — possibly an OLDER sidecar-mode
+                # run whose filters lack newer seen keys (probe false
+                # negatives -> re-crawled duplicates). Rebuild from the seen
+                # snapshot this round actually reads whenever the manifest
+                # lacks the sidecar entry, not merely when the table is empty.
+                sizing = (F.count(F.lit(1)).alias("n"),
+                          F.coalesce(F.sum(F.length("words")), F.lit(0)).alias("blob_bytes"))
                 stats = side_df.agg(*sizing).first()
-            self._sidecar_df = side_df
-            if stats["blob_bytes"] > self.sidecar_broadcast_max_bytes:
-                # filters too big to ship via closure: partitioned probe
-                filtered = filter_new_urls_sidecar_partitioned(
-                    deduped, seen, side_df, self.sidecar_shards, self.bloom
+                if "seen_sidecar" not in state["snapshot_ids"] or stats["n"] == 0:
+                    rebuilt = build_cuckoo_sidecar(seen, self.sidecar_shards)
+                    side_df, _ = self._stage_df(rebuilt, round_no, "sidecar_rebuilt")
+                    stats = side_df.agg(*sizing).first()
+                self._sidecar_df = side_df
+                if stats["blob_bytes"] > self.sidecar_broadcast_max_bytes:
+                    # filters too big to ship via closure: partitioned probe
+                    filtered = filter_new_urls_sidecar_partitioned(
+                        deduped, seen, side_df, self.sidecar_shards, self.bloom
+                    )
+                else:
+                    # collect is O(n_shards) rows — config-sized broadcast
+                    filtered = filter_new_urls_sidecar(
+                        deduped, seen, side_df.collect(), self.sidecar_shards,
+                        self.bloom,
+                    )
+            else:
+                filtered = filter_new_urls(deduped, seen, self.bloom,
+                                           confirm=self.seen_mode)
+            new_links, _ = self._stage_df(filtered, round_no, "new_links")
+            release(filtered)  # probe caches served their terminal write
+            _mark("seen_filter")
+            allowed, robots_rejected = split_by_robots(new_links, self._robots_df)
+
+            # ---- priority scoring (Arrow UDFs unless parity fast path) ----
+            # novelty is PARENT-scoped: each new link inherits the mean
+            # min-Hamming (vs the already-seen phash sample) of the images on
+            # the page that discovered it, so links from pages serving novel
+            # imagery are crawled sooner. The depth term dominates, so only
+            # within-depth order changes (SURVEY.md §4.4 tie-break contract).
+            if self.weights.novelty > 0.0 or self.weights.budget > 0.0:
+                joined = allowed
+                nov_col = F.lit(0.0)
+                press_col = F.lit(0.0)
+                if self.weights.novelty > 0.0:
+                    if decoded is None:
+                        raise ValueError("novelty weight requires keep_images=True")
+                    # deterministic seen-sample: first 4096 phashes by image_id
+                    # (TakeOrdered — a bare limit() samples nondeterministically)
+                    sample = np.array(
+                        [r["phash"] for r in dfs["images"].select("image_id", "phash")
+                         .orderBy("image_id").limit(4096).collect()],
+                        dtype=np.int64,
+                    )
+                    nov = novelty_udf(sample)
+                    parent_nov = (
+                        decoded.select("url_hash", "phash")
+                        .withColumn("_nov1", nov(F.col("phash")))
+                        .groupBy("url_hash")
+                        .agg(F.avg("_nov1").alias("_novelty"))
+                        .withColumnRenamed("url_hash", "parent_hash")
+                    )
+                    joined = joined.join(parent_nov, "parent_hash", "left")
+                    nov_col = F.coalesce(F.col("_novelty"), F.lit(0.0))
+                if self.weights.budget > 0.0:
+                    budgets = self._politeness.select(
+                        "host", F.col("budget_per_round").alias("_bud")
+                    )
+                    press = (
+                        remainder.groupBy("host").agg(F.count(F.lit(1)).alias("_bk"))
+                        .join(budgets, "host", "left")
+                        .select(
+                            "host",
+                            (F.col("_bk") / (F.col("_bk") + F.coalesce(F.col("_bud"), F.lit(5))))
+                            .alias("_press"),
+                        )
+                    )
+                    joined = joined.join(press, "host", "left")
+                    press_col = F.coalesce(F.col("_press"), F.lit(0.0))
+                score = priority_udf(self.weights)
+                frontier_add = (
+                    joined.withColumn("priority", score(F.col("depth"), nov_col, press_col))
+                    .drop("_novelty", "_press")
                 )
             else:
-                # collect is O(n_shards) rows — config-sized broadcast
-                filtered = filter_new_urls_sidecar(
-                    deduped, seen, side_df.collect(), self.sidecar_shards,
-                    self.bloom,
-                )
-        else:
-            filtered = filter_new_urls(deduped, seen, self.bloom,
-                                       confirm=self.seen_mode)
-        new_links, _ = self._stage_df(filtered, round_no, "new_links")
-        release(filtered)  # probe caches served their terminal write
-        _mark("seen_filter")
-        allowed, robots_rejected = split_by_robots(new_links, self._robots_df)
-
-        # ---- priority scoring (Arrow UDFs unless parity fast path) --------
-        # novelty is PARENT-scoped: each new link inherits the mean
-        # min-Hamming (vs the already-seen phash sample) of the images on
-        # the page that discovered it, so links from pages serving novel
-        # imagery are crawled sooner. The depth term dominates, so only
-        # within-depth order changes (SURVEY.md §4.4 tie-break contract).
-        if self.weights.novelty > 0.0 or self.weights.budget > 0.0:
-            joined = allowed
-            nov_col = F.lit(0.0)
-            press_col = F.lit(0.0)
-            if self.weights.novelty > 0.0:
-                if decoded is None:
-                    raise ValueError("novelty weight requires keep_images=True")
-                # deterministic seen-sample: first 4096 phashes by image_id
-                # (TakeOrdered — a bare limit() samples nondeterministically)
-                sample = np.array(
-                    [r["phash"] for r in dfs["images"].select("image_id", "phash")
-                     .orderBy("image_id").limit(4096).collect()],
-                    dtype=np.int64,
-                )
-                nov = novelty_udf(sample)
-                parent_nov = (
-                    decoded.select("url_hash", "phash")
-                    .withColumn("_nov1", nov(F.col("phash")))
-                    .groupBy("url_hash")
-                    .agg(F.avg("_nov1").alias("_novelty"))
-                    .withColumnRenamed("url_hash", "parent_hash")
-                )
-                joined = joined.join(parent_nov, "parent_hash", "left")
-                nov_col = F.coalesce(F.col("_novelty"), F.lit(0.0))
-            if self.weights.budget > 0.0:
-                budgets = self._politeness.select(
-                    "host", F.col("budget_per_round").alias("_bud")
-                )
-                press = (
-                    remainder.groupBy("host").agg(F.count(F.lit(1)).alias("_bk"))
-                    .join(budgets, "host", "left")
-                    .select(
-                        "host",
-                        (F.col("_bk") / (F.col("_bk") + F.coalesce(F.col("_bud"), F.lit(5))))
-                        .alias("_press"),
-                    )
-                )
-                joined = joined.join(press, "host", "left")
-                press_col = F.coalesce(F.col("_press"), F.lit(0.0))
-            score = priority_udf(self.weights)
-            frontier_add = (
-                joined.withColumn("priority", score(F.col("depth"), nov_col, press_col))
-                .drop("_novelty", "_press")
+                frontier_add = allowed.withColumn("priority", parity_priority(F.col("depth")))
+            frontier_add = frontier_add.select(
+                "url_hash", "url", "host", "depth", "ord", "priority",
+                F.lit(round_no).alias("discovered_round"), "parent_hash",
             )
-        else:
-            frontier_add = allowed.withColumn("priority", parity_priority(F.col("depth")))
-        frontier_add = frontier_add.select(
-            "url_hash", "url", "host", "depth", "ord", "priority",
-            F.lit(round_no).alias("discovered_round"), "parent_hash",
-        )
+            results_staged = results_future.result()  # overlap ends here
+        except BaseException as e:
+            # join the staging job on every exit, and report its failure
+            # together with the one that ended the round
+            staging_error = results_future.exception()
+            if staging_error is not None and staging_error is not e:
+                e.add_note(f"results staging also failed: {staging_error!r}")
+            raise
+        finally:
+            results_pool.shutdown()
 
         # ---- lineage metrics per host -------------------------------------
-        results_staged = results_future.result()  # overlap ends here
-        results_pool.shutdown()
         results_new = self.spark.read.schema(schemas.RESULTS).parquet(results_staged[0])
         _mark("results_stage_wait")
         lineage_new = self._build_lineage(
@@ -709,14 +717,10 @@ class CrawlEngine:
         staged["results"] = results_staged  # written once, earlier
         m.results_rows = staged["results"][1]
         # remaining metrics from the staged lineage files (driver-side read)
-        import glob as _glob
-
-        import pyarrow.parquet as _pq
-
-        for f in _glob.glob(os.path.join(staged["lineage"][0], "*.parquet")):
-            t = _pq.read_table(f, columns=["fetched", "links_new"])
-            m.fetched += int(t["fetched"].to_pandas().sum())
-            m.links_new += int(t["links_new"].to_pandas().sum())
+        lineage = read_staged(staged["lineage"], pa.schema(
+            [("fetched", pa.int64()), ("links_new", pa.int64())]))
+        m.fetched = int(pc.sum(lineage["fetched"]).as_py() or 0)
+        m.links_new = int(pc.sum(lineage["links_new"]).as_py() or 0)
         self.store.commit_round(
             staged, round_no, self.run_id,
             extra={"seq_base": seq_base + m.scheduled},
@@ -736,10 +740,7 @@ class CrawlEngine:
             # (~0.85 s/round of pure job latency at bench scale). Resume
             # still uses the distributed add_to_bloom over the full seen
             # table, where a driver read would not scale.
-            for f in _glob.glob(os.path.join(staged["seen"][0], "*.parquet")):
-                t = _pq.read_table(f, columns=["url_hash"])
-                self.bloom.add(
-                    t["url_hash"].to_numpy(zero_copy_only=False).astype(np.int64))
+            self._add_staged_to_bloom(staged["seen"])
         _mark("bloom_update")
         if (self.compact_every is not None
                 and round_no % self.compact_every == 0):
@@ -932,7 +933,7 @@ class CrawlEngine:
             cat_product_links
         ).unionByName(listing_links)
         return (
-            all_links.withColumn("url", canonicalize_url_udf(F.col("child_url")))
+            all_links.withColumn("url", canonicalize_url_col(F.col("child_url")))
             .withColumn("host", host_of(F.col("url")))
             .select(
                 F.xxhash64("url").alias("url_hash"),

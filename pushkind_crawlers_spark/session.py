@@ -10,8 +10,12 @@ boundary, UTC pinned for DuckDB-oracle comparison.
 from __future__ import annotations
 
 import os
+from typing import Iterable
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 def get_spark(
@@ -46,3 +50,17 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: Iterable[tuple],
+                schema: T.StructType | str) -> DataFrame:
+    """A constant frame held by the JVM as a local relation.
+
+    ``createDataFrame`` over a Python list is backed by a PythonRDD, so every
+    scan of it starts Python workers (one per task); an Arrow table is
+    shipped to the JVM once and scanned there."""
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    table = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows],
+                                 schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)

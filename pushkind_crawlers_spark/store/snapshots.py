@@ -38,10 +38,13 @@ import time
 import uuid
 from dataclasses import dataclass
 
-import pyarrow.parquet as pq
+import pyarrow as pa
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..session import local_frame
 
 
 class CommitConflictError(RuntimeError):
@@ -62,11 +65,23 @@ DEFAULT_BUCKETS = 16
 
 
 def parquet_rows(path: str) -> int:
-    """Row count from parquet footers — no Spark job, no data read."""
-    return sum(
-        pq.read_metadata(f).num_rows
-        for f in glob.glob(os.path.join(path, "*.parquet"))
-    )
+    """Row count from the footers of the parquet files under ``path``, at
+    any depth — no Spark job, no data read."""
+    return ds.dataset(path, format="parquet").count_rows()
+
+
+def read_staged(staged: tuple[str, int], columns: pa.Schema) -> pa.Table:
+    """Driver-side read of ``columns`` from a staged directory's parquet
+    files, at any depth.
+
+    ``staged`` is :meth:`SnapshotTable.stage`'s ``(path, footer row
+    count)``: a positive count with no files found means the writer's
+    layout moved away from the reader, which must not read as empty."""
+    path, rows = staged
+    dataset = ds.dataset(path, schema=columns, format="parquet")
+    if rows > 0 and not dataset.files:
+        raise RuntimeError(f"{path}: {rows} rows staged but no parquet files found")
+    return dataset.to_table()
 
 
 @dataclass
@@ -136,10 +151,10 @@ class SnapshotTable:
         if sid is None:
             if self.schema is None:
                 raise ValueError(f"{self.name}: empty table with no schema")
-            return spark.createDataFrame([], self.schema)
+            return local_frame(spark, [], self.schema)
         paths = self._snap_paths(self._snapshot(m, sid))
         if not paths:
-            return spark.createDataFrame([], self.schema)
+            return local_frame(spark, [], self.schema)
         reader = spark.read.schema(self.schema) if self.schema else spark.read
         df = reader.parquet(*paths)
         return df.select(*[f.name for f in self.schema.fields]) if self.schema else df
@@ -373,7 +388,7 @@ class SnapshotTable:
                             base = base.select(
                                 *[f.name for f in self.schema.fields])
                     else:
-                        base = spark.createDataFrame([], self.schema)
+                        base = local_frame(spark, [], self.schema)
                     merged = merge_fn(base, batch)
                     root, staged = self._stage_bucketed(merged, spec)
                     touched = batch_buckets

@@ -121,7 +121,7 @@ def start_frontier_ingest(spark: SparkSession, input_dir: str,
     by which point the streaming checkpoint has long since committed.)
     """
     from .. import schemas
-    from ..functions.urlnorm import canonicalize_url_udf, host_of
+    from ..functions.urlnorm import canonicalize_url_col, host_of
     from ..plans.crawl import hseg_col
     from ..store.snapshots import SnapshotStore
     from .state import stateful_seen_filter
@@ -142,7 +142,7 @@ def start_frontier_ingest(spark: SparkSession, input_dir: str,
         .parquet(input_dir)
     )
     canon = (
-        raw.withColumn("url", canonicalize_url_udf(F.col("raw_url")))
+        raw.withColumn("url", canonicalize_url_col(F.col("raw_url")))
         .withColumn("host", host_of(F.col("url")))
         .withColumn("ord", hseg_col(F.col("seed_idx")))
         .withColumn("url_hash", F.xxhash64("url"))
@@ -165,6 +165,7 @@ def make_ingest_sink(spark: SparkSession, store, tables: dict, run_id: str):
     """The idempotent foreachBatch sink of :func:`start_frontier_ingest`
     (module-level so tests can replay a batch_id directly)."""
     from ..operators.priority import parity_priority
+    from ..session import local_frame
 
     def sink(batch_df, batch_id: int) -> None:
         state = store.read_run_state()
@@ -189,7 +190,7 @@ def make_ingest_sink(spark: SparkSession, store, tables: dict, run_id: str):
             for name in ("results", "rejects", "images",
                          "crawl_order", "lineage"):
                 staged[name] = store.table(name).stage(
-                    spark.createDataFrame([], tables[name])
+                    local_frame(spark, [], tables[name])
                 )
             # first batch: pin every publish to the EMPTY table (r05
             # advice) — a crash between the table publish and the run

@@ -273,3 +273,58 @@ def test_cuckoo_mode_crawl_identical(spark, tmp_path):
     seen = {r["url"]: r["discovered_round"]
             for r in eng.store.table("seen").read(spark).collect()}
     assert seen == oracle.seen
+
+
+def test_discovery_failure_joins_results_staging(spark, tmp_path):
+    """A link with port 99999 makes the round's discovery job raise while
+    the results staging job runs on its driver thread: the engine
+    re-raises the discovery error and leaves no pool thread behind."""
+    import threading
+
+    from pushkind_crawlers_spark.plans.crawl import make_world_fetch_fn
+
+    world = _tiny_world()
+    world_fetch = make_world_fetch_fn(world)
+
+    def fetch_with_bad_port(batches):
+        for pdf in world_fetch(batches):
+            pdf["out_links"] = [
+                None if links is None else [*links, "http://site0.test:99999/x"]
+                for links in pdf["out_links"]]
+            yield pdf
+
+    def pool_threads():
+        return {t for t in threading.enumerate()
+                if t.name.startswith("ThreadPoolExecutor")}
+
+    before = pool_threads()
+    eng = CrawlEngine(spark, world, str(tmp_path / "p"),
+                      fetch_fn=fetch_with_bad_port)
+    with pytest.raises(Exception, match="Port out of range"):
+        eng.run()
+    assert pool_threads() <= before
+
+
+def test_staged_reads_find_nested_files(tmp_path):
+    """Footer counts and driver-side reads of a staged directory see its
+    parquet files at any depth, and a positive staged count over a
+    directory with no files fails loud instead of reading as empty."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pushkind_crawlers_spark.store.snapshots import parquet_rows, read_staged
+
+    url_hash = pa.schema([("url_hash", pa.int64())])
+    root = tmp_path / "staged"
+    (root / "a" / "b").mkdir(parents=True)
+    pq.write_table(pa.table({"url_hash": [1, 2]}), root / "part-0.parquet")
+    pq.write_table(pa.table({"url_hash": [3]}), root / "a" / "b" / "part-1.parquet")
+    (root / "_SUCCESS").touch()
+    assert parquet_rows(str(root)) == 3
+    got = read_staged((str(root), 3), url_hash)
+    assert sorted(got["url_hash"].to_pylist()) == [1, 2, 3]
+
+    (tmp_path / "empty").mkdir()
+    assert read_staged((str(tmp_path / "empty"), 0), url_hash).num_rows == 0
+    with pytest.raises(RuntimeError, match="no parquet files"):
+        read_staged((str(tmp_path / "empty"), 2), url_hash)

@@ -212,3 +212,38 @@ def test_grouping_sets_single_expand_pass(spark):
     plan = _plan(spark, "grouping_sets_revenue")
     assert plan.count("Expand") >= 1
     assert plan.count("Scan parquet") == 1 or plan.count("FileScan") == 1
+
+
+def test_crawl_round_plans_stay_jvm(spark, tmp_path):
+    """A round's schedule, discovery (``candidates``) and results-staging
+    plans run without Python: no Python UDF evaluation, no scan of a
+    Python-built RDD in the plan, and no PythonRDD in the RDD lineage.
+    Python workers start only at the round's real UDF boundaries (fetch,
+    image decode, Bloom probe, scoring)."""
+    from pushkind_crawlers_spark.plans.crawl import CrawlEngine
+    from pushkind_crawlers_spark.synth.worldgen import SyntheticWorld, WorldConfig
+
+    world = SyntheticWorld(WorldConfig(
+        seed=5, n_hosts=1, categories_range=(1, 1), pages_range=(1, 1),
+        links_per_page=(2, 3), images_per_product=(0, 0), budget_scale=10,
+    ))
+    eng = CrawlEngine(spark, world, str(tmp_path / "s"))
+    frames = {}
+    stage_df, results = eng._stage_df, eng.store.table("results")
+    stage_results = results.stage
+
+    def capture_stage_df(df, round_no, name):
+        frames[name] = df
+        return stage_df(df, round_no, name)
+
+    def capture_results(df):
+        frames["results"] = df
+        return stage_results(df)
+
+    eng._stage_df, results.stage = capture_stage_df, capture_results
+    eng.run(max_rounds=1)
+    for name in ("scheduled", "candidates", "results"):
+        qe = frames[name]._jdf.queryExecution()
+        plan = qe.executedPlan().toString()
+        assert "EvalPython" not in plan and "ExistingRDD" not in plan, (name, plan)
+        assert "PythonRDD" not in qe.toRdd().toDebugString(), name
